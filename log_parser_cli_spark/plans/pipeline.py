@@ -25,9 +25,13 @@ Scale shape (designed for 10^12 rows / 1000 executors, exercised on local[N]):
 from __future__ import annotations
 
 import os
+import re
 import time
+import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -37,6 +41,14 @@ from log_parser_cli_spark.plans.checkpoint import Manifest
 
 UNPARSED = "__UNPARSED__"
 UNMATCHED = "__UNMATCHED__"
+# the routed table's columns: content/content_sig are derivable (render +
+# mask of tokens), so they are not carried through the fan-out shuffle;
+# tokens ride untouched
+ROUTED_COLUMNS = (
+    "doc_id", "tokens", "n_tok", "source", "sink", "template_id",
+    "template_star", "variables", "n_vars",
+)
+_PART_FILE = re.compile(r"part-(\d+).*\.parquet$")
 
 
 @dataclass
@@ -377,12 +389,7 @@ def route_stage(
     routed_path = os.path.join(out_dir, "routed")
     table = SnapshotTable(routed_path)
     table.commit_overwrite(
-        enriched.select(
-            # content/content_sig are derivable (render+mask of tokens) — not
-            # carried through the fan-out shuffle; tokens ride untouched.
-            "doc_id", "tokens", "n_tok", "source", "sink", "template_id",
-            "template_star", "variables", "n_vars",
-        ).repartition(
+        enriched.select(*ROUTED_COLUMNS).repartition(
             F.col("sink"), F.col("template_id"), F.pmod(F.hash("doc_id"), F.lit(salt_buckets))
         ),
         partition_by=("sink", "template_id"),
@@ -461,16 +468,47 @@ def aggregate_stage(spark: SparkSession, routed: DataFrame, out_dir: str) -> dic
     return {"sink_counts": counts_path, "ntok_hist": hist_path}
 
 
-def _lineage(df: DataFrame, stage: str, run_id: str, out_dir: str, wall_ms: float) -> int:
-    """Per-partition lineage rows (K4 analog): rows per partition per stage."""
-    from pyspark.sql.functions import spark_partition_id
+def written_files(path: str) -> list[tuple[int, int]]:
+    """(partition_id, rows) of every parquet file one finished Spark write
+    left under ``path`` (partition subdirs included), read from the file
+    footers on the driver — exact, and no Spark job.
 
-    stats = df.groupBy(spark_partition_id().alias("partition_id")).count()
-    rows = stats.withColumn("stage", F.lit(stage)).withColumn("run_id", F.lit(run_id)).withColumn(
-        "wall_ms", F.lit(float(wall_ms))
+    ``partition_id`` is the writer task's ``part-NNNNN`` number; a
+    partitioned write leaves one file per (task, partition value), so an id
+    can repeat. Raises FileNotFoundError when ``path`` holds no ``_SUCCESS``
+    marker (missing, unfinished or non-local dir): never a silent 0.
+    """
+    if not os.path.isfile(os.path.join(path, "_SUCCESS")):
+        raise FileNotFoundError(f"{path}: no _SUCCESS marker, not a finished write")
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for name in sorted(names):
+            m = _PART_FILE.match(name)
+            if m:
+                rows = pq.read_metadata(os.path.join(root, name)).num_rows
+                files.append((int(m.group(1)), rows))
+    return files
+
+
+def _append_run_metrics(
+    out_dir: str, stage: str, run_id: str, wall_ms: float, files: list[tuple[int, int]]
+) -> None:
+    """Append one ``run_metrics`` row per written file (K4 analog), with
+    pyarrow on the driver."""
+    n = len(files)
+    table = pa.table(
+        {
+            "partition_id": pa.array([p for p, _ in files], pa.int32()),
+            "count": pa.array([c for _, c in files], pa.int64()),
+            "stage": pa.array([stage] * n, pa.string()),
+            "run_id": pa.array([run_id] * n, pa.string()),
+            "wall_ms": pa.array([wall_ms] * n, pa.float64()),
+        }
     )
-    rows.write.mode("append").parquet(os.path.join(out_dir, "run_metrics"))
-    return sum(r["count"] for r in stats.collect())
+    metrics_dir = os.path.join(out_dir, "run_metrics")
+    os.makedirs(metrics_dir, exist_ok=True)
+    pq.write_table(table, os.path.join(metrics_dir, f"{stage}-{uuid.uuid4().hex[:12]}.parquet"))
 
 
 def run_replay(
@@ -482,26 +520,20 @@ def run_replay(
     seq_df: DataFrame | None = None,
     retain_snapshots: int = 2,
 ) -> int:
-    """Lean scoring pass: parse → enrich (frozen mapping) → route → aggregate.
-
-    The reference's replay phase (replay-matcher.ts:40-111): all counting runs
-    against an immutable template library. One wide action (the fan-out write)
-    materializes everything — parse streams straight into the salted shuffle,
-    no intermediate persist — then the per-sink aggregates reduce the routed
-    files. Returns the routed row count.
-    """
-    vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
-    if seq_df is None:
-        seq_df = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
-    parsed = parse_stage(spark, seq_df, vocab_rows, source_heads)
-    enriched = enrich_stage(parsed, mapping_df, sources_df)
-    route_stage(enriched, out_dir, salt_buckets=salt_buckets, retain_snapshots=retain_snapshots)
-    routed = read_routed(spark, out_dir)
-    aggregate_stage(spark, routed, out_dir)
-    counts = spark.read.parquet(os.path.join(out_dir, "sink_counts"))
-    from pyspark.sql.functions import sum as _sum
-
-    return int(counts.agg(_sum("n_sequences")).first()[0] or 0)
+    """Lean scoring pass — the reference's replay phase
+    (replay-matcher.ts:40-111): ``run_pipeline`` against the frozen
+    ``mapping_df`` with no parse checkpoint. Returns the routed row count."""
+    result = run_pipeline(
+        spark,
+        fixture_dir,
+        out_dir,
+        salt_buckets=salt_buckets,
+        mapping_df=mapping_df,
+        seq_df=seq_df,
+        checkpoint_parse=False,
+        retain_snapshots=retain_snapshots,
+    )
+    return result.counts["parsed"]
 
 
 def run_pipeline(
@@ -523,24 +555,27 @@ def run_pipeline(
 ) -> PipelineResult:
     """Full parse → enrich → route → aggregate job.
 
-    ``mapping_df``: pass a frozen template mapping to run match-only replay
-    (the reference's --match-only path); otherwise discovery runs first.
-    ``resume=True`` skips stages committed in the checkpoint manifest
-    (requires ``checkpoint_parse=True``, the default).
-    ``checkpoint_parse=False`` keeps the parsed stream on local storage
-    (persist DISK_ONLY — a memory-level cache thrashes against the route
-    shuffle's execution memory) instead of materializing to parquet — faster
-    for one-shot runs, but a crash then restarts from stage 1.
-    ``derive_heads=True`` ignores the configured head patterns and derives
-    them from the token table itself (the reference's ensureHeadPattern step,
-    manager.ts:31-213) before parsing.
-    ``infer_missing_sources=True`` routes NULL/empty-source rows to a library
-    by head-pattern vote before parsing (the reference's routing step, §3.1a).
-    ``refine=True`` routes the discovered clusters through the full
-    conflict→delete→requeue candidate queue (``refine_mapping``) before
-    routing, optionally against a carried-over ``seed_library``; per-candidate
-    reports land in ``out_dir/refine_reports.json``.
+    ``mapping_df``: a frozen template mapping runs match-only (the
+    reference's --match-only path); otherwise discovery runs first.
+    ``checkpoint_parse=True`` (default) writes the parsed stream to parquet,
+    so ``resume=True`` can skip stages committed in the manifest. With
+    ``False`` the run is one-shot: in match-only mode parse streams straight
+    into the route shuffle; with discovery the parsed stream is persisted
+    DISK_ONLY for its two consumers. A crash then restarts from stage 1.
+    ``lineage=True`` appends one ``run_metrics`` row per written file of the
+    parse and route stages (needs ``checkpoint_parse``).
+    ``derive_heads`` / ``infer_missing_sources`` derive head patterns /
+    missing sources from the token table before parsing; ``refine`` runs the
+    discovered clusters through ``refine_mapping`` (against an optional
+    ``seed_library``) and writes ``out_dir/refine_reports.json``.
+
+    Row counts come from the footers of the files each stage writes
+    (``written_files``): ``counts["parsed"]`` is the parse stage's rows, or
+    in one-shot mode the routed rows — every parsed row is routed exactly
+    once, as both enrich joins are left joins on unique keys.
     """
+    if lineage and not checkpoint_parse:
+        raise ValueError("lineage=True needs checkpoint_parse=True (no parse output to count)")
     result = PipelineResult(out_dir=out_dir)
     manifest = Manifest(out_dir, run_id)
     vocab_rows, source_heads, sources_df = load_dims(spark, fixture_dir)
@@ -556,75 +591,54 @@ def run_pipeline(
         source_heads = derive_heads_stage(spark, seq_df, vocab_rows)
 
     parsed_path = os.path.join(out_dir, "parsed")
+    discover = mapping_df is None
 
     def stage(name: str, fn):
+        """Run ``fn`` → (dir it wrote or None, manifest info); count the
+        written dir's rows and commit the stage to the manifest."""
         if resume and manifest.is_done(name):
             result.stages_skipped.append(name)
             return
         t0 = time.time()
-        info = fn() or {}
-        manifest.commit(name, wall_ms=(time.time() - t0) * 1000.0, **info)
+        written, info = fn()
+        files = written_files(written) if written is not None else None
+        wall_ms = (time.time() - t0) * 1000.0
+        if files is not None:
+            info["rows"] = sum(n for _, n in files)
+            if lineage:
+                _append_run_metrics(out_dir, name, run_id, wall_ms, files)
+        manifest.commit(name, wall_ms=wall_ms, **info)
         result.stages_run.append(name)
 
-    # -- stage 1: parse (checkpointed so downstream stages & resume reuse it)
-    parsed_cached: DataFrame | None = None
+    # -- stage 1: parse
+    parsed: DataFrame | None = None
 
     def do_parse():
-        nonlocal parsed_cached
+        nonlocal parsed
         parsed = parse_stage(spark, seq_df, vocab_rows, source_heads)
         if checkpoint_parse:
             parsed.write.mode("overwrite").parquet(parsed_path)
             parsed = spark.read.parquet(parsed_path)
-            parsed_cached = parsed
-            if lineage:
-                n = _lineage(parsed, "parse", run_id, out_dir, 0)
-            else:
-                # row count from the just-written files' parquet footers —
-                # exact, driver-side, no scan job
-                import glob as _glob
-
-                import pyarrow.parquet as _pq
-
-                n = sum(
-                    _pq.ParquetFile(f).metadata.num_rows
-                    for f in _glob.glob(os.path.join(parsed_path, "*.parquet"))
-                )
-        else:
-            # One-shot mode: persist OFF-HEAP on local storage, not in
-            # executor memory. The default MEMORY_AND_DISK cache of the fat
-            # parsed stream (19.2M rows × tokens+content) competes with the
-            # route shuffle's execution memory and thrashes: measured route
-            # 33s from a memory cache vs 23s from DISK_ONLY at bench scale
-            # (guide §5 — cached data competes with execution memory), and
-            # the full no-persist recompute alternative re-pays the 11s
-            # Python parse per consumer (measured 53-56s total vs ~46s).
+            return parsed_path, {}
+        if discover:
+            # discovery and route both read the stream. Persist it on local
+            # disk, not in executor memory: a memory cache of the fat parsed
+            # stream competes with the route shuffle's execution memory and
+            # thrashes (measured route 33 s from a memory cache vs 23 s from
+            # DISK_ONLY at bench scale), and no persist re-pays the Python
+            # parse per consumer (measured 53-56 s total vs ~46 s).
             from pyspark import StorageLevel
 
             parsed = parsed.persist(StorageLevel.DISK_ONLY)
-            parsed_cached = parsed
-            if lineage:
-                n = _lineage(parsed, "parse", run_id, out_dir, 0)
-            else:
-                # Deferred count (guide §1.2: remove whole passes): a
-                # dedicated count() action here would pay parse + cache
-                # write, and then discovery would re-scan the cache for its
-                # signature aggregation. Let the FIRST downstream action
-                # (discovery's aggregation — or the route write in
-                # match-only mode) materialize the cache in that same pass;
-                # the row count is read back from the cached batches after
-                # the run (column-pruned scan of batch counts, ~1s vs a
-                # 6-9s dedicated pass at 19.2M rows).
-                result.counts["parsed"] = -1
-                return {}
-        result.counts["parsed"] = n
-        return {"rows": n}
+        return None, {}
 
     stage("parse", do_parse)
-    parsed = parsed_cached if parsed_cached is not None else spark.read.parquet(parsed_path)
+    if parsed is None:
+        parsed = spark.read.parquet(parsed_path)
 
     # -- stage 2: discover (skipped in match-only mode)
     mapping_path = os.path.join(out_dir, "template_mapping")
-    if mapping_df is None:
+    if discover:
 
         def do_discover():
             mapping = discover_templates(spark, parsed)
@@ -641,23 +655,20 @@ def run_pipeline(
                 info["refine_deleted"] = sorted({d for r in reports for d in r["deleted_ids"]})
             mapping.write.mode("overwrite").parquet(mapping_path)
             info["templates"] = mapping.select("template_id").distinct().count()
-            return info
+            return None, info
 
         stage("discover", do_discover)
-        mapping_df_local = spark.read.parquet(mapping_path)
-    else:
-        mapping_df_local = mapping_df
+        mapping_df = spark.read.parquet(mapping_path)
 
     # -- stage 3: enrich + route
-    enriched = enrich_stage(parsed, mapping_df_local, sources_df)
+    enriched = enrich_stage(parsed, mapping_df, sources_df)
 
     def do_route():
         routed_path = route_stage(
             enriched, out_dir, salt_buckets=salt_buckets, retain_snapshots=retain_snapshots
         )
-        if lineage:
-            _lineage(read_routed(spark, out_dir), "route", run_id, out_dir, 0)
-        return {"routed_path": routed_path}
+        (data_dir,) = routed_data_dirs(out_dir)
+        return data_dir, {"routed_path": routed_path}
 
     stage("route", do_route)
 
@@ -666,14 +677,11 @@ def run_pipeline(
     #    re-read of the fan-out parquet (no tokens, no variables) is ~2×
     #    cheaper than re-deriving the enriched stream from the parse cache —
     #    and the gap widens at scale where the cache may not be resident.
-    def do_aggregate():
-        return aggregate_stage(spark, read_routed(spark, out_dir), out_dir)
+    stage("aggregate", lambda: (None, aggregate_stage(spark, read_routed(spark, out_dir), out_dir)))
 
-    stage("aggregate", do_aggregate)
-    if not checkpoint_parse and parsed_cached is not None:
-        if result.counts.get("parsed", 0) < 0:
-            # cache was materialized by discovery/route above; this scan
-            # decodes no columns, it just sums cached-batch row counts
-            result.counts["parsed"] = parsed_cached.count()
-        parsed_cached.unpersist()
+    if parsed.is_cached:
+        parsed.unpersist()
+    counted = manifest.stage_info("parse" if checkpoint_parse else "route") or {}
+    if "rows" in counted:
+        result.counts["parsed"] = counted["rows"]
     return result

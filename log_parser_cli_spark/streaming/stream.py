@@ -11,10 +11,8 @@ Streaming:
   table the batch route stage writes: a retried batch replaces its own dirs,
   a killed batch is never visible). The checkpointLocation gives exactly-once
   per-batch resume — the streaming twin of the batch manifest.
-- ``windowed_event_counts``: event-time windowed aggregation with a watermark
-  (late-data tolerant counts per sink), the streaming analog of the per-sink
-  aggregates. The reference has no watermark/event-time semantics (T5) — this
-  is the Spark-native extension point.
+- ``stream_with_discovery``: the same, but each micro-batch first extends
+  the template library with its novel signatures (evolving state, T2).
 
 Tested with ``trigger(availableNow=True)`` so pytest runs bounded.
 """
@@ -27,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from log_parser_cli_spark.operators.parse import parse_stage
-from log_parser_cli_spark.plans.pipeline import enrich_stage, load_dims
+from log_parser_cli_spark.plans.pipeline import ROUTED_COLUMNS, enrich_stage, load_dims
 from log_parser_cli_spark.plans.snapshots import SnapshotTable
 
 
@@ -79,10 +77,7 @@ def stream_replay(
         # read_routed never observe a torn batch, unlike the previous
         # batch_id=N/ plain-dir layout).
         table.commit_batch(
-            enriched.select(
-                "doc_id", "tokens", "n_tok", "source", "sink", "template_id",
-                "template_star", "variables", "n_vars",
-            ).withColumn("batch_id", F.lit(batch_id).cast("long")),
+            enriched.select(*ROUTED_COLUMNS).withColumn("batch_id", F.lit(batch_id).cast("long")),
             batch_id=batch_id,
             partition_by=("sink", "template_id"),
         )
@@ -196,10 +191,7 @@ def stream_with_discovery(
         _commit_mapping(mapping, mapping_root, batch_id)
         enriched = enrich_stage(parsed, mapping, sources_df)
         table.commit_batch(
-            enriched.select(
-                "doc_id", "tokens", "n_tok", "source", "sink", "template_id",
-                "template_star", "variables", "n_vars",
-            ).withColumn("batch_id", F.lit(batch_id).cast("long")),
+            enriched.select(*ROUTED_COLUMNS).withColumn("batch_id", F.lit(batch_id).cast("long")),
             batch_id=batch_id,
             partition_by=("sink", "template_id"),
         )
@@ -211,72 +203,3 @@ def stream_with_discovery(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stream_dedup_events(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    watermark: str = "30 minutes",
-    available_now: bool = True,
-):
-    """Streaming exact dedup with BOUNDED state (Spark-native extension,
-    the streaming twin of ``extras.dedup.exact_dup_stats``): duplicate
-    ``event_id``s arriving within the event-time watermark are dropped via
-    ``dropDuplicatesWithinWatermark``, and the dedup state for an id is
-    evicted once the watermark passes its event time. A plain
-    ``dropDuplicates`` on a stream keeps every id ever seen in state —
-    unbounded growth on an unbounded stream; the watermarked form is the
-    only shape that runs forever at the design scale (duplicates in real
-    pipelines arrive close together: retries, at-least-once producers).
-
-    Returns the started query; output is the SnapshotTable at
-    ``out_dir/deduped`` — read it via ``SnapshotTable(...).read(spark)``, not
-    a plain parquet read. (The built-in streaming file sink's exactly-once
-    guarantee lives in its _spark_metadata log, which a plain parquet read
-    ignores; committing each micro-batch through the snapshot protocol makes
-    the no-torn-batch guarantee hold for ANY reader, same as the routed sink.)
-    """
-    schema = spark.read.parquet(events_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_dir)
-    )
-    deduped = (
-        stream.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .dropDuplicatesWithinWatermark(["event_id"])
-    )
-    table = SnapshotTable(os.path.join(out_dir, "deduped"))
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table.commit_batch(batch_df, batch_id=batch_id)
-
-    writer = (
-        deduped.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", os.path.join(out_dir, "_dedup_checkpoint"))
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    window_duration: str = "1 hour",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Event-time windowed counts with late-data watermark (streaming or batch
-    DataFrame — same expression works for both)."""
-    return (
-        events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), F.col("event_type"))
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-        )
-    )

@@ -128,3 +128,87 @@ def test_salted_fanout_splits_hot_template(spark, fixture_dir, pipeline_out, tmp
     )
     files = glob.glob(os.path.join(tpl_dir, "*.parquet"))
     assert len(files) >= 2, f"hot template wrote {len(files)} file(s) — salting ineffective"
+
+
+def _jobs_submitted(spark, fn) -> int:
+    """Spark jobs ``fn`` submits: the status tracker's job-id set difference
+    around the call, after the listener bus has delivered every event."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup())
+    fn()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(set(tracker.getJobIdsForGroup()) - before)
+
+
+def test_lineage_adds_no_spark_job(spark, fixture_dir, pipeline_out, tmp_path):
+    from log_parser_cli_spark.plans.pipeline import run_pipeline
+
+    with_lineage = _jobs_submitted(
+        spark, lambda: run_pipeline(spark, fixture_dir, str(tmp_path / "on"), lineage=True)
+    )
+    without = _jobs_submitted(
+        spark, lambda: run_pipeline(spark, fixture_dir, str(tmp_path / "off"), lineage=False)
+    )
+    assert with_lineage == without
+
+
+def test_lineage_rows_carry_stage_wall_time(spark, pipeline_out):
+    import json
+
+    metrics = spark.read.parquet(os.path.join(pipeline_out, "run_metrics")).collect()
+    assert metrics and all(r.wall_ms > 0 for r in metrics)
+    with open(os.path.join(pipeline_out, "_manifest.json")) as f:
+        stages = json.load(f)["stages"]
+    for r in metrics:
+        assert r.wall_ms == stages[r.stage]["wall_ms"]
+    for name in ("parse", "route"):
+        assert stages[name]["rows"] == sum(r["count"] for r in metrics if r.stage == name)
+
+
+def test_one_shot_parsed_count_is_input_rows(spark, fixture_dir, tmp_path):
+    from log_parser_cli_spark.plans.pipeline import run_pipeline
+
+    seq = spark.read.parquet(os.path.join(fixture_dir, "sequences.parquet"))
+    res = run_pipeline(spark, fixture_dir, str(tmp_path / "out"), checkpoint_parse=False)
+    assert res.counts["parsed"] == seq.count()
+
+
+def test_run_replay_returns_sink_count_total(spark, fixture_dir, pipeline_out, tmp_path):
+    from log_parser_cli_spark.plans.pipeline import run_replay
+
+    mapping = spark.read.parquet(os.path.join(pipeline_out, "template_mapping"))
+    out = str(tmp_path / "replay")
+    n = run_replay(spark, fixture_dir, out, mapping)
+    counts = spark.read.parquet(os.path.join(out, "sink_counts"))
+    assert n == counts.agg(F.sum("n_sequences")).first()[0]
+    assert not os.path.exists(os.path.join(out, "parsed"))  # one-shot: no parse checkpoint
+
+
+def test_lineage_needs_parse_checkpoint(spark, fixture_dir, tmp_path):
+    import pytest
+
+    from log_parser_cli_spark.plans.pipeline import run_pipeline
+
+    with pytest.raises(ValueError):
+        run_pipeline(spark, fixture_dir, str(tmp_path), lineage=True, checkpoint_parse=False)
+
+
+def test_written_files_counts_footers_and_needs_success_marker(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from log_parser_cli_spark.plans.pipeline import written_files
+
+    d = tmp_path / "w"
+    (d / "k=a").mkdir(parents=True)
+    pq.write_table(pa.table({"x": [1, 2, 3]}), str(d / "k=a" / "part-00002-u.c000.parquet"))
+    pq.write_table(pa.table({"x": [4]}), str(d / "part-00007-u.c000.parquet"))
+    with pytest.raises(FileNotFoundError):
+        written_files(str(d))
+    with pytest.raises(FileNotFoundError):
+        written_files(str(tmp_path / "missing"))
+    (d / "_SUCCESS").touch()
+    assert sorted(written_files(str(d))) == [(2, 3), (7, 1)]

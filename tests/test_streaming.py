@@ -6,7 +6,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from log_parser_cli_spark.plans.pipeline import read_routed, run_pipeline
-from log_parser_cli_spark.streaming.stream import stream_replay, windowed_event_counts
+from log_parser_cli_spark.streaming.stream import stream_replay
 
 
 def test_stream_replay_matches_batch(spark, fixture_dir, pipeline_out, tmp_path):
@@ -106,51 +106,6 @@ def test_stream_kill_mid_batch_never_exposes_partial(
     q2 = stream_replay(spark, fixture_dir, out, mapping, available_now=True)
     q2.awaitTermination(120)
     assert read_routed(spark, out).count() == read_routed(spark, pipeline_out).count()
-
-
-def test_stream_dedup_events_bounded_state(spark, tmp_path):
-    """Streaming exact dedup: duplicate event_ids across micro-batches (the
-    at-least-once-producer shape) are dropped; state is watermark-bounded."""
-    from log_parser_cli_spark.plans.snapshots import SnapshotTable
-    from log_parser_cli_spark.streaming.stream import stream_dedup_events
-
-    src = str(tmp_path / "events_src")
-    rows = [
-        (i, f"2024-01-01 00:{i % 50:02d}:00", i % 7, "click", 1.0, "{}")
-        for i in range(200)
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts string, user_id long, event_type string, value double, props string"
-    ).withColumn("ts", F.col("ts").cast("timestamp"))
-    df.coalesce(1).write.parquet(src)
-    # second file replays half the ids (producer retry) → exact duplicates
-    df.filter(F.col("event_id") < 100).coalesce(1).write.mode("append").parquet(src)
-
-    out = str(tmp_path / "dedup_out")
-    q = stream_dedup_events(spark, src, out, watermark="1 hour", available_now=True)
-    q.awaitTermination(120)
-    # the sink is a SnapshotTable (same no-torn-batch posture as routed)
-    got = SnapshotTable(os.path.join(out, "deduped")).read(spark)
-    ids = [r.event_id for r in got.select("event_id").collect()]
-    assert sorted(ids) == list(range(200))  # each id exactly once
-    assert len(ids) == len(set(ids))
-
-
-def test_windowed_event_counts_batch_semantics(spark):
-    rows = [
-        ("2024-01-01 00:10:00", "click"),
-        ("2024-01-01 00:20:00", "click"),
-        ("2024-01-01 01:05:00", "click"),
-        ("2024-01-01 01:30:00", "view"),
-    ]
-    df = spark.createDataFrame(rows, "ts string, event_type string")
-    got = {
-        (str(r.window_start), r.event_type): r.n_events
-        for r in windowed_event_counts(df, "1 hour", "30 minutes").collect()
-    }
-    assert got[("2024-01-01 00:00:00", "click")] == 2
-    assert got[("2024-01-01 01:00:00", "click")] == 1
-    assert got[("2024-01-01 01:00:00", "view")] == 1
 
 
 def test_mapping_commit_survives_crash_mid_write(spark, tmp_path):
